@@ -21,9 +21,11 @@ import java.security.MessageDigest
   *    — we only promise stable, uniform, engine-independent routing, not
   *    the service's exact key→shard map);
   *  - each record lands as `<path>/<stream>/<shard>/<seq 20-digit>.rec`
-  *    containing `key \n payload` — exactly the layout
-  *    [[graft.streaming.ProduceSink.PutRecordWriter]] writes and
-  *    [[ShardSpoolSource]] reads, so native write → native read round-trips.
+  *    containing `key \n payload` — the layout [[ShardSpoolSource]] reads,
+  *    so native write → native read round-trips;
+  *  - a record PutRecord would reject (NULL partition key or data) prints
+  *    `ERROR: …` and is skipped while the rest of the write commits — the
+  *    reference's print-and-continue (producer.go:44-46).
   *
   * Exactly-once protocol (streaming): tasks stage records under
   * `<path>/.staging/<writeId>-<epoch>/`; the driver's `commit` then
@@ -87,7 +89,7 @@ class ShardSpoolWrite(opts: Map[String, String], inputSchema: StructType)
     val next = scala.collection.mutable.Map.empty[String, Long]
     def nextSeq(shard: String): Long = {
       val n = next.getOrElseUpdate(shard,
-        ShardSpoolSource.seqs(new File(streamDir, shard)).lastOption.getOrElse(-1L) + 1)
+        ShardSpoolSource.lastSeq(new File(streamDir, shard)) + 1)
       next(shard) = n + 1
       n
     }
@@ -228,9 +230,15 @@ class ShardWriterFactory(path: String, stream: String, shardCount: Int,
       private var n = 0L
       private val staged = Seq.newBuilder[ShardSpoolSink.StagedFile]
 
-      override def write(row: InternalRow): Unit = {
+      override def write(row: InternalRow): Unit =
         // PutRecord per row: explicit key required (B2's random-hex default
-        // is applied upstream by RecordPipeline.partitionKey)
+        // is applied upstream by RecordPipeline.partitionKey); a rejected
+        // record is printed and skipped, the write goes on (producer.go:44-46)
+        if (row.isNullAt(keyIdx)) println("ERROR: record skipped: partitionKey is null")
+        else if (row.isNullAt(dataIdx)) println("ERROR: record skipped: data is null")
+        else stage(row)
+
+      private def stage(row: InternalRow): Unit = {
         val key = row.getUTF8String(keyIdx).toString
         val payload = row.getBinary(dataIdx)
         val shard = ShardSpoolSink.shardForWith(md5, key, shardCount)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -16,8 +17,8 @@ import scala.collection.JavaConverters._
 /** DataSource V2 micro-batch source implementing the shard-spool protocol
   * natively (SURVEY.md §2 A2–A4, A6; §4.2's "proper DSv2 source" option).
   *
-  * Layout (exactly what [[graft.streaming.ProduceSink.PutRecordWriter]]
-  * writes — produce → consume round-trips through one directory contract):
+  * Layout (exactly what [[ShardSpoolSink]] writes — `graft.Cli produce` →
+  * `graft.Cli consume` round-trips through this one directory contract):
   *
   * {{{
   *   <path>/<stream>/<shardId>/<seq 20-digit>.rec   ("key\n" ++ payload)
@@ -43,9 +44,10 @@ import scala.collection.JavaConverters._
   *    trigger (per-shard admission control, like the per-fetch cap);
   *  - `NextShardIterator` threading (consumer.go:137,166) → the
   *    checkpointed per-shard offset map, JSON `{shard: lastSeqInclusive}`;
-  *  - iterator modes (consumer.go:125-130): LATEST / TRIM_HORIZON resolve
-  *    in `initialOffset`; AT_SEQUENCE_NUMBER seeds the offset map;
-  *    AT_TIMESTAMP filters on arrival time (file mtime) at read.
+  *  - iterator modes (consumer.go:125-130), parsed by [[StartPosition]]:
+  *    LATEST / TRIM_HORIZON resolve in `initialOffset`; AT_SEQUENCE_NUMBER
+  *    seeds the offset map; AT_TIMESTAMP filters on arrival time (file
+  *    mtime) at read.
   *
   * Usage:
   * {{{
@@ -74,22 +76,73 @@ object ShardSpoolSource {
     StructField("partitionKey", StringType),
     StructField("data", BinaryType)))
 
-  /** List open shard dirs (closed = `_closed` marker, skipped at startup).
+  /** Every shard dir of a stream, open or closed, in name order.
     * Underscore-prefixed dirs are metadata (`_epochs`), not shards.
     */
-  def openShards(streamDir: java.io.File): Seq[String] = {
-    val subs = Option(streamDir.listFiles()).getOrElse(Array.empty)
-    subs.filter(_.isDirectory)
-      .filterNot(_.getName.startsWith("_"))
-      .filterNot(d => new java.io.File(d, "_closed").exists())
-      .map(_.getName).sorted.toSeq
-  }
+  def shardDirs(streamDir: java.io.File): Seq[java.io.File] =
+    Option(streamDir.listFiles()).getOrElse(Array.empty)
+      .filter(d => d.isDirectory && !d.getName.startsWith("_"))
+      .sortBy(_.getName).toSeq
+
+  private def isClosed(shardDir: java.io.File): Boolean =
+    new java.io.File(shardDir, "_closed").exists()
+
+  /** Open shard names (closed = `_closed` marker, skipped at startup). */
+  def openShards(streamDir: java.io.File): Seq[String] =
+    shardDirs(streamDir).filterNot(isClosed).map(_.getName)
 
   /** Sequence numbers present in a shard dir (from `<seq>.rec` names). */
   def seqs(shardDir: java.io.File): Seq[Long] = {
     val fs = Option(shardDir.listFiles()).getOrElse(Array.empty)
     fs.filter(f => f.isFile && f.getName.endsWith(".rec"))
       .map(_.getName.stripSuffix(".rec").toLong).sorted.toSeq
+  }
+
+  /** A shard's high-water mark: its last sequence number, -1 when empty. */
+  def lastSeq(shardDir: java.io.File): Long = seqs(shardDir).lastOption.getOrElse(-1L)
+
+  /** Every shard's high-water mark, open or closed. */
+  def highWaterMarks(path: String, stream: String): Map[String, Long] =
+    shardDirs(new java.io.File(path, stream)).map(d => d.getName -> lastSeq(d)).toMap
+
+  /** `(shardId, sequenceNumber)` of every record committed to a stream
+    * above the `before` marks ([[highWaterMarks]] taken before a write), in
+    * shard then sequence order — the PutRecord acks of that write
+    * (producer.go:47-50), provided no other writer ran in between.
+    */
+  def committedSince(path: String, stream: String,
+      before: Map[String, Long]): Seq[(String, Long)] =
+    shardDirs(new java.io.File(path, stream)).flatMap { d =>
+      val from = before.getOrElse(d.getName, -1L)
+      seqs(d).filter(_ > from).map(d.getName -> _)
+    }
+
+  private val createdFormat = java.time.format.DateTimeFormatter
+    .ofPattern("EEE, dd MMM yyyy HH:mm:ss 'UTC'", java.util.Locale.US)
+    .withZone(java.time.ZoneOffset.UTC)
+
+  /** Stream-info table (§2 B6) — the 6-row key/value descriptor the verbose
+    * consumer prints before streaming (consumer.go:88-114). Active counts
+    * open shard dirs and Closed the `_closed` markers; "Created at" is the
+    * stream dir's creation time (its mtime where the filesystem keeps no
+    * birth time). A spool has no encryption or retention setting, so those
+    * rows show Kinesis's defaults.
+    */
+  def streamInfo(spark: SparkSession, path: String, stream: String): DataFrame = {
+    val dir = new java.io.File(path, stream)
+    val (closed, open) = shardDirs(dir).partition(isClosed)
+    val created =
+      if (!dir.isDirectory) "-"
+      else createdFormat.format(java.nio.file.Files.readAttributes(dir.toPath,
+        classOf[java.nio.file.attribute.BasicFileAttributes]).creationTime().toInstant)
+    import spark.implicits._
+    Seq(
+      "Stream name:" -> stream,
+      "Created at:" -> created,
+      "Encryption:" -> "NONE",
+      "Retention:" -> "24 hours",
+      "Active:" -> s"${open.size} shards",
+      "Closed:" -> s"${closed.size} shards").toDF("k", "v")
   }
 }
 
@@ -147,6 +200,16 @@ class ShardSpoolScan(opts: Map[String, String]) extends Scan {
 
   override def readSchema(): StructType = ShardSpoolSource.schema
 
+  // parsed at scan build: an invalid iterator / since / seq fails here,
+  // before the stream starts (C10/D3)
+  private val start = StartPosition.parse(opts.getOrElse("iterator", "LATEST"),
+    opts.get("since"), opts.get("seq").map(_.toLong))
+  // AT_TIMESTAMP filters on arrival time; other modes don't constrain it
+  private val sinceMicros = start match {
+    case StartPosition.AtTimestamp(ts) => ts.toEpochMilli * 1000L
+    case _ => Long.MinValue
+  }
+
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
       ShardSpoolSource.openShards(streamDir).map { shard =>
@@ -155,30 +218,11 @@ class ShardSpoolScan(opts: Map[String, String]) extends Scan {
     override def createReaderFactory(): PartitionReaderFactory = new ShardReaderFactory
   }
 
-  private def sinceMicros: Long = {
-    // AT_TIMESTAMP filter; other modes don't constrain arrival time.
-    // Invalid RFC3339 fails here, before the stream starts (C10/D3).
-    if (opts.getOrElse("iterator", "LATEST") == "AT_TIMESTAMP")
-      opts.get("since") match {
-        case Some(s) =>
-          try java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli * 1000L
-          catch {
-            case e: java.time.format.DateTimeParseException =>
-              throw new IllegalArgumentException(
-                s"--since needs to be in RFC3339 format. $s: ${e.getMessage}")
-          }
-        case None => Long.MinValue // zero time: everything (consumer.go:63-72)
-      }
-    else Long.MinValue
-  }
-
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new MicroBatchStream
       with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
       with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-      private val iteratorType = opts.getOrElse("iterator", "LATEST")
       private val limitPerTrigger = opts.getOrElse("limitpertrigger", "500").toLong
-      private val since = sinceMicros
       // shard set fixed at query open, like the reference (consumer.go:83-85)
       private lazy val shards = ShardSpoolSource.openShards(streamDir)
 
@@ -188,27 +232,18 @@ class ShardSpoolScan(opts: Map[String, String]) extends Scan {
       private var availableNowTarget: Option[Map[String, Long]] = None
       override def prepareForTriggerAvailableNow(): Unit =
         availableNowTarget = Some(shards.map { shard =>
-          shard -> ShardSpoolSource.seqs(new java.io.File(streamDir, shard))
-            .lastOption.getOrElse(-1L)
+          shard -> ShardSpoolSource.lastSeq(new java.io.File(streamDir, shard))
         }.toMap)
 
-      override def initialOffset(): Offset = {
-        val m = shards.map { shard =>
-          val existing = ShardSpoolSource.seqs(new java.io.File(streamDir, shard))
-          iteratorType match {
-            case "LATEST" => shard -> existing.lastOption.getOrElse(-1L)
-            case "TRIM_HORIZON" | "AT_TIMESTAMP" => shard -> -1L
-            case "AT_SEQUENCE_NUMBER" =>
-              val seq = opts.getOrElse("seq",
-                throw new IllegalArgumentException(
-                  "AT_SEQUENCE_NUMBER needs option 'seq'")).toLong
-              shard -> (seq - 1) // start inclusive at `seq`
-            case other =>
-              throw new IllegalArgumentException(s"unknown iterator type $other")
-          }
-        }.toMap
-        ShardOffsets(m)
-      }
+      override def initialOffset(): Offset =
+        ShardOffsets(shards.map { shard =>
+          shard -> (start match {
+            case StartPosition.Latest =>
+              ShardSpoolSource.lastSeq(new java.io.File(streamDir, shard))
+            case StartPosition.AtSequenceNumber(seq) => seq - 1 // inclusive at `seq`
+            case StartPosition.TrimHorizon | StartPosition.AtTimestamp(_) => -1L
+          })
+        }.toMap)
 
       override def latestOffset(): Offset =
         throw new UnsupportedOperationException("driver calls reportLatestOffset")
@@ -238,7 +273,7 @@ class ShardSpoolScan(opts: Map[String, String]) extends Scan {
         e.toSeq.sortBy(_._1).flatMap { case (shard, endSeq) =>
           val startSeq = s.getOrElse(shard, -1L)
           if (endSeq > startSeq)
-            Some(ShardPartition(path, stream, shard, startSeq, endSeq, since))
+            Some(ShardPartition(path, stream, shard, startSeq, endSeq, sinceMicros))
           else None
         }.toArray
       }

@@ -1,7 +1,7 @@
 package graft
 
-import graft.streaming._
-import org.apache.spark.sql.Row
+import graft.sources.ShardSpoolSource
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
@@ -9,7 +9,8 @@ import java.sql.Timestamp
 
 /** CLI + control-semantics suite: arg validation (§2 D3, ports the
   * TestRead error cases of consumer_test.go:39-107), fail-fast first-error
-  * termination (§2 D1), and the assembled consume pipeline.
+  * termination (§2 D1), and the assembled consume pipeline over the
+  * `graft-shards` spool.
   */
 class CliSpec extends SparkSpec {
 
@@ -62,26 +63,37 @@ class CliSpec extends SparkSpec {
 
   // ---- the assembled consume pipeline (SURVEY §3.1 lifecycle)
   private def b(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+  private def tmp(): String = Files.createTempDirectory("graft-cli").toString
+
+  /** Put one record file into the spool, arriving at `at` (its mtime). */
+  private def put(dir: String, seq: String, key: String, payload: Array[Byte],
+      at: String = "2024-01-02T03:04:05Z"): Unit = {
+    val d = new java.io.File(s"$dir/s1/shardId-000000000000"); d.mkdirs()
+    val f = new java.io.File(d, s"$seq.rec")
+    Files.write(f.toPath, b(key + "\n") ++ payload)
+    f.setLastModified(java.time.Instant.parse(at).toEpochMilli)
+  }
+
+  private def drain(df: DataFrame): Seq[String] = {
+    val name = s"t${System.nanoTime()}"
+    val q = df.writeStream.format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    spark.table(name).collect().map(_.getString(0)).toSeq
+  }
 
   test("consume pipeline: deaggregate + zlib + console projection end-to-end") {
-    val dir = Files.createTempDirectory("graft-cli").toString
+    val dir = tmp()
     val deflated = {
       val buf = new java.io.ByteArrayOutputStream()
       val dos = new java.util.zip.DeflaterOutputStream(buf)
       dos.write(b("compressed payload\n")); dos.close(); buf.toByteArray
     }
-    val framed = graft.kpl.KplCodec.aggregate(Seq("k1" -> deflated))
-    val rows = Seq(
-      Row("shardId-000000000000", 1L, Timestamp.valueOf("2024-01-02 03:04:05"),
-        "parent", framed, "NONE"))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), RecordSchema.schema)
-      .write.parquet(s"$dir/s1")
+    put(dir, f"${1L}%020d", "parent", graft.kpl.KplCodec.aggregate(Seq("k1" -> deflated)))
     val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON",
       compress = Some("zlib"), spool = dir)
-    val lines = Cli.consumeFrame(spark, cfg, batch = true)
-      .collect().map(_.getString(0))
     // deaggregated, inflated, trailing \n trimmed, ts-formatted
-    assert(lines.toSeq == Seq("2024-01-02 03:04:05 compressed payload"))
+    assert(drain(Cli.consumeFrame(spark, cfg)) == Seq("2024-01-02 03:04:05 compressed payload"))
   }
 
   test("--verify-md5 passes NULL-data rows through while dropping corrupt frames") {
@@ -89,45 +101,56 @@ class CliSpec extends SparkSpec {
     // explicit `data IS NULL OR` arm a NULL-data row would filter to NULL
     // and be silently dropped — diverging from the default path, which
     // passes NULLs through deaggregate. The verify filter must only drop
-    // provably-corrupt KPL frames.
-    val dir = Files.createTempDirectory("graft-cli").toString
+    // provably-corrupt KPL frames. A spool record always carries data, so
+    // the NULL row goes through the same verify/decode step in memory.
     val goodFrame = graft.kpl.KplCodec.aggregate(Seq("k1" -> b("good payload\n")))
     val corruptFrame = {
       val f = goodFrame.clone()
       f(f.length - 1) = (f(f.length - 1) ^ 0x5A).toByte // break the MD5 trailer
       f
     }
+    def row(seq: Long, at: String, key: String, data: Array[Byte]) =
+      Row("s1", "shardId-000000000000", seq, Timestamp.valueOf(at), key, data)
     val rows = Seq(
-      Row("shardId-000000000000", 1L, Timestamp.valueOf("2024-01-02 03:04:05"),
-        "pk-good", goodFrame, "NONE"),
-      Row("shardId-000000000000", 2L, Timestamp.valueOf("2024-01-02 03:04:06"),
-        "pk-corrupt", corruptFrame, "NONE"),
-      Row("shardId-000000000000", 3L, Timestamp.valueOf("2024-01-02 03:04:07"),
-        "pk-null", null, "NONE"))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), RecordSchema.schema)
-      .write.parquet(s"$dir/s1")
+      row(1L, "2024-01-02 03:04:05", "pk-good", goodFrame),
+      row(2L, "2024-01-02 03:04:06", "pk-corrupt", corruptFrame),
+      row(3L, "2024-01-02 03:04:07", "pk-null", null))
+    val raw = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      ShardSpoolSource.schema)
     val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON",
-      spool = dir, verifyMd5 = true)
-    val out = Cli.consumeFrame(spark, cfg, batch = true)
-      .collect().map(_.getString(0)).sorted
+      verifyMd5 = true)
+    val out = Cli.decode(raw, cfg).collect().map(_.getString(0)).sorted
     // corrupt frame dropped whole; good frame deaggregated; NULL-data row kept
     assert(out.length == 2, s"got ${out.toSeq}")
     assert(out.exists(_.endsWith("good payload")))
     assert(out.forall(!_.contains("corrupt")))
   }
 
+  test("produce → consume round trip under -c zlib and --verify-md5") {
+    // stdin lines through Cli.produce (plain and -a) come back unchanged:
+    // -c zlib passes non-deflated payloads through raw, --verify-md5 keeps
+    // every intact KPL frame
+    val dir = tmp()
+    val plain = Seq("plain one", "plain two")
+    val packed = Seq("packed one", "packed two", "packed three")
+    Cli.produce(spark, Cli.ProduceConfig(stream = "s1", spool = dir), plain)
+    Cli.produce(spark, Cli.ProduceConfig(stream = "s1", key = Some("k"),
+      aggregated = true, spool = dir), packed)
+    val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON",
+      compress = Some("zlib"), verifyMd5 = true, spool = dir)
+    val out = drain(Cli.consumeFrame(spark, cfg)).map(_.drop("yyyy-MM-dd HH:mm:ss ".length))
+    assert(out.sorted == (plain ++ packed).sorted)
+  }
+
   // ---- D1: first stream error terminates the query (consumer.go:57-61)
   test("fail-fast: a poisoned shard file kills the whole query") {
-    val dir = Files.createTempDirectory("graft-cli").toString
-    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
-      Row("shardId-000000000000", 1L, Timestamp.valueOf("2024-01-01 00:00:00"),
-        "k", b("ok"), "NONE")), 1), RecordSchema.schema)
-      .write.parquet(s"$dir/s1")
-    // corrupt parquet: valid footer magic missing → task failure at read
-    Files.write(java.nio.file.Paths.get(s"$dir/s1/zzz-poison.parquet"),
-      "this is not parquet".getBytes(StandardCharsets.UTF_8))
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"), StartPosition.TrimHorizon))
-    val q = r.load(spark).writeStream.format("memory")
+    val dir = tmp()
+    put(dir, f"${1L}%020d", "k", b("ok"))
+    // a record file whose name is not a sequence number → the shard can't
+    // be listed → the query fails
+    put(dir, "zzz-poison", "k", b("this is not a record"))
+    val cfg = Cli.ConsumeConfig(streams = Seq("s1"), iterator = "TRIM_HORIZON", spool = dir)
+    val q = Cli.consumeFrame(spark, cfg).writeStream.format("memory")
       .queryName(s"t${System.nanoTime()}")
       .trigger(Trigger.AvailableNow()).start()
     val e = intercept[StreamingQueryException] { q.awaitTermination() }

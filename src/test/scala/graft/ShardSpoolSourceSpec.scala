@@ -7,13 +7,13 @@ import java.nio.file.Files
 
 /** DSv2 shard-spool source suite: native micro-batch offsets, start modes,
   * per-shard partitions, admission control, closed shards, checkpoint
-  * resume — over the exact files PutRecordWriter produces.
+  * resume — over the exact files the `graft-shards` sink produces.
   */
 class ShardSpoolSourceSpec extends SparkSpec {
 
   private def tmp(): String = Files.createTempDirectory("graft-dsv2").toString
 
-  /** Write one record the PutRecordWriter way: "<key>\n<payload>". */
+  /** Write one record the way the sink lays it out: "<key>\n<payload>". */
   private def put(dir: String, stream: String, shard: String, seq: Long,
       key: String, payload: String): Unit = {
     val d = new java.io.File(s"$dir/$stream/$shard"); d.mkdirs()

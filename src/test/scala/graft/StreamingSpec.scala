@@ -1,22 +1,25 @@
 package graft
 
 import graft.kpl.KplCodec
-import graft.operators.RecordPipeline
-import graft.streaming._
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import graft.sources.{ShardSpoolSink, ShardSpoolSource, StartPosition}
+import graft.streaming.ProduceSink
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.sql.Timestamp
 
-/** Streaming semantics suite (SURVEY.md §7.2 M3): the emulated
-  * Kinesis-shaped source's four start modes, per-trigger limit, closed-shard
-  * skip, multi-stream fan-in; de-aggregation as a streaming transform;
-  * watermark late-data drop; and the producer sink's error tolerance —
-  * mirroring the reference's mocked-client test approach (fake the source,
-  * assert the sink).
+/** Streaming semantics through the CLI's own path: lines go in through
+  * `Cli.produce` (the `graft-shards` sink) and come out of
+  * `Cli.consumeFrame` (one `graft-shards` source per stream) — the four
+  * start modes, per-trigger limit, closed-shard skip, multi-stream fan-in,
+  * KPL de-aggregation, checkpoint resume, the verbose produce ack and the
+  * stream-info table; plus watermark late-data drop and the sink's
+  * per-record error tolerance. ShardSpoolSourceSpec / ShardSpoolSinkSpec
+  * pin the same contracts one layer down, on the source and sink alone.
   */
 class StreamingSpec extends SparkSpec {
 
@@ -25,72 +28,97 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  /** Write records into the spool for one stream. */
-  private def spool(dir: String, stream: String, rows: Seq[Row]): Unit =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), RecordSchema.schema)
-      .write.mode(SaveMode.Append).parquet(s"$dir/$stream")
+  private def produce(dir: String, lines: Seq[String], key: Option[String] = None,
+      aggregated: Boolean = false, stream: String = "s1"): Seq[(String, Long)] =
+    Cli.produce(spark, Cli.ProduceConfig(stream = stream, key = key,
+      aggregated = aggregated, spool = dir), lines)
 
-  private def rec(shard: String, seq: Long, at: String, key: String, data: String): Row =
-    Row(shard, seq, ts(at), key, b(data), "NONE")
+  private def consume(dir: String, iterator: String, since: Option[String] = None,
+      seq: Option[Long] = None, limit: Int = 500, streams: Seq[String] = Seq("s1"),
+      verbose: Boolean = false): DataFrame =
+    Cli.consumeFrame(spark, Cli.ConsumeConfig(streams = streams, iterator = iterator,
+      since = since, seq = seq, limit = limit, verbose = verbose, spool = dir))
+
+  /** Rendered lines of a plain-mode consume, timestamp column dropped. */
+  private def messages(df: DataFrame): Seq[String] =
+    df.collect().map(_.getString(0).drop("yyyy-MM-dd HH:mm:ss ".length)).toSeq.sorted
 
   /** Run a streaming frame to completion over current spool contents. */
-  private def collectStream(df: DataFrame): Seq[Row] = {
+  private def drain(df: DataFrame): (DataFrame, StreamingQuery) = {
     val name = s"t${System.nanoTime()}"
     val q = df.writeStream.format("memory").queryName(name)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
-    spark.table(name).collect().toSeq
+    (spark.table(name), q)
   }
 
-  private def baseSpool(): String = {
-    val dir = tmp()
-    spool(dir, "s1", Seq(
-      rec("shardId-000000000000", 1, "2024-01-01 00:00:00", "k1", "r1"),
-      rec("shardId-000000000000", 2, "2024-01-01 01:00:00", "k2", "r2"),
-      rec("shardId-000000000001", 3, "2024-01-01 02:00:00", "k3", "r3"),
-      rec("shardId-000000000001", 4, "2024-01-01 03:00:00", "k4", "r4")))
-    dir
+  private def eventually(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (!cond) {
+      assert(System.nanoTime() < deadline, s"timed out waiting for $what")
+      Thread.sleep(100)
+    }
   }
+
+  private def rec(dir: String, stream: String, shard: String, seq: Long): File =
+    new File(s"$dir/$stream/$shard", f"$seq%020d.rec")
+
+  /** Two keys the producer routes to different shards. */
+  private val (keyA, keyB) = {
+    def shard(k: String) = ShardSpoolSink.shardFor(k, Cli.ProduceShards)
+    ("key0", Iterator.from(1).map(i => s"key$i").find(k => shard(k) != shard("key0")).get)
+  }
+
+  private val lines4 = Seq("r1", "r2", "r3", "r4")
 
   test("TRIM_HORIZON reads everything") {
-    val dir = baseSpool()
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"), StartPosition.TrimHorizon))
-    val rows = collectStream(r.load(spark))
-    assert(rows.map(_.getAs[Long]("sequenceNumber")).sorted == Seq(1L, 2L, 3L, 4L))
+    val dir = tmp()
+    produce(dir, lines4)
+    assert(messages(drain(consume(dir, "TRIM_HORIZON"))._1) == lines4)
   }
 
   test("LATEST only surfaces records newer than the open-time high-water mark") {
-    val dir = baseSpool()
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"), StartPosition.Latest))
-    val stream = r.load(spark) // snapshot marks taken here: max seq 2 and 4
-    spool(dir, "s1", Seq(
-      rec("shardId-000000000000", 5, "2024-01-01 04:00:00", "k5", "r5"),
-      rec("shardId-000000000001", 6, "2024-01-01 05:00:00", "k6", "r6")))
-    val rows = collectStream(stream)
-    assert(rows.map(_.getAs[Long]("sequenceNumber")).sorted == Seq(5L, 6L))
+    val dir = tmp()
+    // one key → one shard, known to the query at open
+    produce(dir, Seq("old1", "old2"), key = Some("k"))
+    assert(messages(drain(consume(dir, "LATEST"))._1).isEmpty,
+      "records present at open are skipped")
+    val name = s"t${System.nanoTime()}"
+    val q = consume(dir, "LATEST").writeStream.format("memory").queryName(name)
+      .trigger(Trigger.ProcessingTime(50)).start()
+    try {
+      eventually("the first trigger to resolve the high-water marks")(q.recentProgress.nonEmpty)
+      produce(dir, Seq("new1", "new2"), key = Some("k"))
+      eventually("the new records")(spark.table(name).count() >= 2)
+      assert(messages(spark.table(name)) == Seq("new1", "new2"))
+    } finally q.stop()
   }
 
   test("AT_SEQUENCE_NUMBER starts from the given sequence number inclusive") {
-    val dir = baseSpool()
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"),
-      StartPosition.parse("AT_SEQUENCE_NUMBER", seq = Some(3L))))
-    val rows = collectStream(r.load(spark))
-    assert(rows.map(_.getAs[Long]("sequenceNumber")).sorted == Seq(3L, 4L))
+    val dir = tmp()
+    val acks = produce(dir, lines4, key = Some("k"))
+    assert(acks.map(_._2) == Seq(0L, 1L, 2L, 3L), "one shard, dense sequence in line order")
+    assert(messages(drain(consume(dir, "AT_SEQUENCE_NUMBER", seq = Some(2L)))._1) ==
+      Seq("r3", "r4"))
   }
 
   test("AT_TIMESTAMP starts from the parsed RFC3339 instant") {
-    val dir = baseSpool()
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"),
-      StartPosition.parse("AT_TIMESTAMP", since = Some("2024-01-01T02:00:00Z"))))
-    val rows = collectStream(r.load(spark))
-    assert(rows.map(_.getAs[Long]("sequenceNumber")).sorted == Seq(3L, 4L))
+    val dir = tmp()
+    val acks = produce(dir, lines4, key = Some("k"))
+    // arrival time is the record file's mtime: r1..r4 arrive at 00:00..03:00
+    acks.zipWithIndex.foreach { case ((shard, seq), i) =>
+      rec(dir, "s1", shard, seq).setLastModified(
+        java.time.Instant.parse(s"2024-01-01T0$i:00:00Z").toEpochMilli)
+    }
+    val (out, _) = drain(consume(dir, "AT_TIMESTAMP", since = Some("2024-01-01T02:00:00Z")))
+    assert(messages(out) == Seq("r3", "r4"))
   }
 
   test("AT_TIMESTAMP with no --since uses the zero time (reads everything)") {
-    val dir = baseSpool()
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"),
-      StartPosition.parse("AT_TIMESTAMP")))
-    assert(collectStream(r.load(spark)).size == 4)
+    val dir = tmp()
+    val acks = produce(dir, lines4)
+    acks.foreach { case (shard, seq) => rec(dir, "s1", shard, seq).setLastModified(1000L) }
+    assert(messages(drain(consume(dir, "AT_TIMESTAMP"))._1) == lines4)
   }
 
   test("invalid --since fails fast before any stream starts (consumer.go:48-51)") {
@@ -98,58 +126,51 @@ class StreamingSpec extends SparkSpec {
       StartPosition.parse("AT_TIMESTAMP", since = Some("invalid-timestamp"))
     }
     assert(e.getMessage.contains("RFC3339"))
+    val active = spark.streams.active.length
+    val e2 = intercept[IllegalArgumentException] {
+      consume(tmp(), "AT_TIMESTAMP", since = Some("invalid-timestamp"))
+    }
+    assert(e2.getMessage.contains("RFC3339"))
+    assert(spark.streams.active.length == active, "no query was started")
   }
 
   test("closed shards are skipped at startup (consumer.go:116-123)") {
-    val dir = baseSpool()
-    import spark.implicits._
-    Seq(("shardId-000000000000", Option.empty[String]),
-      ("shardId-000000000001", Some("seq-end")))
-      .toDF("shardId", "endingSequenceNumber")
-      .write.parquet(s"$dir/s1/_shards")
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"), StartPosition.TrimHorizon))
-    val rows = collectStream(r.load(spark))
-    assert(rows.map(_.getAs[Long]("sequenceNumber")).sorted == Seq(1L, 2L))
+    val dir = tmp()
+    produce(dir, Seq("a1", "a2"), key = Some(keyA))
+    produce(dir, Seq("b1", "b2"), key = Some(keyB))
+    val closedShard = ShardSpoolSink.shardFor(keyB, Cli.ProduceShards)
+    Files.write(new File(s"$dir/s1/$closedShard/_closed").toPath, Array.emptyByteArray)
+    assert(messages(drain(consume(dir, "TRIM_HORIZON"))._1) == Seq("a1", "a2"))
   }
 
   test("multi-stream fan-in unions concurrently consumed streams (consumer.go:53-55)") {
-    val dir = baseSpool()
-    spool(dir, "s2", Seq(rec("shardId-000000000000", 9, "2024-01-01 00:30:00", "kx", "rx")))
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1", "s2"), StartPosition.TrimHorizon))
-    val rows = collectStream(r.load(spark))
-    assert(rows.size == 5)
-    assert(rows.map(_.getAs[String]("stream")).distinct.sorted == Seq("s1", "s2"))
+    val dir = tmp()
+    produce(dir, lines4)
+    produce(dir, Seq("rx"), stream = "s2")
+    val (out, _) = drain(consume(dir, "TRIM_HORIZON", streams = Seq("s1", "s2"), verbose = true))
+    // verbose line: <date> <time> <stream> <shardId> <seq> <message>
+    val fields = out.collect().map(_.getString(0).split(" "))
+    assert(fields.length == 5)
+    assert(fields.map(_(2)).distinct.sorted.toSeq == Seq("s1", "s2"))
+    assert(fields.map(_(5)).sorted.toSeq == (lines4 :+ "rx").sorted)
   }
 
   test("per-trigger limit caps each micro-batch (Limit analog, consumer.go:149-152)") {
     val dir = tmp()
-    // 4 separate spool pushes = 4 files
-    (1 to 4).foreach { i =>
-      spool(dir, "s1", Seq(rec("shardId-000000000000", i.toLong, s"2024-01-01 0$i:00:00", s"k$i", s"r$i")))
-    }
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"),
-      StartPosition.TrimHorizon, limitPerTrigger = 1))
-    val name = s"t${System.nanoTime()}"
-    val q = r.load(spark).writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(spark.table(name).count() == 4)
+    produce(dir, lines4, key = Some("k"))
+    val (out, q) = drain(consume(dir, "TRIM_HORIZON", limit = 1))
+    assert(out.count() == 4)
     val batches = q.recentProgress.filter(_.numInputRows > 0)
-    assert(batches.length == 4, "1-file-per-trigger must yield 4 non-empty micro-batches")
+    assert(batches.length == 4, "1-record-per-trigger must yield 4 non-empty micro-batches")
     assert(batches.forall(_.numInputRows == 1))
   }
 
   test("deaggregation works as a streaming transform") {
     val dir = tmp()
-    val framed = KplCodec.aggregate(Seq("a" -> b("x"), "b" -> b("y")))
-    spool(dir, "s1", Seq(
-      rec("shardId-000000000000", 1, "2024-01-01 00:00:00", "plain", "pl"),
-      Row("shardId-000000000000", 2L, ts("2024-01-01 01:00:00"), "parent", framed, "NONE")))
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"), StartPosition.TrimHorizon))
-    val rows = collectStream(RecordPipeline.deaggregate(r.load(spark)))
-    val out = rows.map(x => (x.getAs[String]("partitionKey"),
-      new String(x.getAs[Array[Byte]]("data"), StandardCharsets.UTF_8))).sorted
-    assert(out == Seq(("a", "x"), ("b", "y"), ("plain", "pl")))
+    val lines = (1 to 5).map(i => s"child$i")
+    val acks = produce(dir, lines, key = Some("k"), aggregated = true)
+    assert(acks.length == 1, "-a packs one key's lines into one KPL record")
+    assert(messages(drain(consume(dir, "TRIM_HORIZON"))._1) == lines)
   }
 
   test("watermark drops late events in streaming session aggregation") {
@@ -180,27 +201,26 @@ class StreamingSpec extends SparkSpec {
     assert(emitted(ts("2024-01-01 00:00:00").getTime * 1000) == 1L)
   }
 
+
   test("produce → consume round trip through the spool (PutRecord emulation)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val dir = tmp()
-    val input = MemoryStream[String]
-    val records = input.toDF()
-      .select(RecordPipeline.partitionKey(None).as("partitionKey"),
-        col("value").cast("binary").as("data"))
-    val q = records.writeStream
-      .foreach(new ProduceSink.PutRecordWriter(dir, "out", nShards = 2, verbose = false))
-      .start()
-    input.addData("msg one", "msg two", "msg three")
-    q.processAllAvailable()
-    q.stop()
-    val files = new java.io.File(s"$dir/out").listFiles().flatMap(_.listFiles()).toSeq
-    assert(files.size == 3)
-    val bodies = files.map { f =>
-      val lines = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      lines.split("\n", 2)(1)
-    }.sorted
-    assert(bodies == Seq("msg one", "msg three", "msg two"))
+    val out = new java.io.ByteArrayOutputStream()
+    val acks = Console.withOut(out) {
+      Cli.produce(spark, Cli.ProduceConfig(stream = "out", verbose = true, spool = dir),
+        Seq("msg one", "msg two", "msg three"))
+    }
+    // the verbose ack (producer.go:47-50) names exactly the .rec files written
+    val written = new File(s"$dir/out").listFiles().toSeq
+      .filter(d => d.isDirectory && !d.getName.startsWith("_"))
+      .flatMap(d => d.listFiles().toSeq.map(f => (d.getName, f.getName)))
+      .sorted
+    assert(written.length == 3)
+    assert(acks.map { case (shard, seq) => (shard, f"$seq%020d.rec") }.sorted == written)
+    assert(out.toString("UTF-8").split("\n").toSeq ==
+      acks.flatMap { case (shard, seq) => Seq(s"$shard $seq", "---") })
+    val (lines, _) = drain(Cli.consumeFrame(spark,
+      Cli.ConsumeConfig(streams = Seq("out"), iterator = "TRIM_HORIZON", spool = dir)))
+    assert(messages(lines) == Seq("msg one", "msg three", "msg two"))
   }
 
   test("producer tolerates per-record failures and continues (producer.go:44-46)") {
@@ -208,20 +228,27 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = tmp()
     val input = MemoryStream[String]
-    // a null partition key makes shardFor throw inside process() for that
-    // record only; the stream must keep going and write the healthy rows
+    // a null partition key is a rejected PutRecord: the sink prints an
+    // ERROR line for that record only and commits the healthy rows
     val records = input.toDF()
       .select(when(col("value") === "poison", lit(null: String))
         .otherwise(col("value")).as("partitionKey"),
         col("value").cast("binary").as("data"))
-    val q = records.writeStream
-      .foreach(new ProduceSink.PutRecordWriter(dir, "out", nShards = 2, verbose = false))
+    val q = records.writeStream.format("graft-shards")
+      .option("path", dir).option("stream", "out").option("shardCount", "2")
+      .option("checkpointLocation", tmp())
       .start()
-    input.addData("ok1", "poison", "ok2")
-    q.processAllAvailable()
-    q.stop()
-    val files = new java.io.File(s"$dir/out").listFiles().flatMap(_.listFiles()).toSeq
-    assert(files.size == 2)
+    try {
+      input.addData("ok1", "poison", "ok2")
+      q.processAllAvailable()
+    } finally q.stop()
+    val bodies = ShardSpoolSource.shardDirs(new File(s"$dir/out")).flatMap { d =>
+      ShardSpoolSource.seqs(d).map { seq =>
+        new String(Files.readAllBytes(rec(dir, "out", d.getName, seq).toPath),
+          StandardCharsets.UTF_8).split("\n", 2)(1)
+      }
+    }
+    assert(bodies.sorted == Seq("ok1", "ok2"))
   }
 
   test("produce-side aggregation round-trips through deaggregate (D4 done properly)") {
@@ -242,34 +269,41 @@ class StreamingSpec extends SparkSpec {
     assert(restored.toSet == (1 to 25).map(i => (s"key${i % 3}", s"payload$i")).toSet)
   }
 
+
   test("checkpoint restart resumes from committed offsets, no reprocessing") {
     val dir = tmp()
     val ckpt = s"$dir/_ckpt"
-    val name = s"t${System.nanoTime()}"
-    spool(dir, "s1", Seq(rec("shardId-000000000000", 1, "2024-01-01 00:00:00", "k1", "r1")))
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"), StartPosition.TrimHorizon))
     def run(): Unit = {
-      val q = r.load(spark).writeStream.format("parquet")
+      val q = consume(dir, "TRIM_HORIZON").writeStream.format("parquet")
         .option("path", s"$dir/_out").option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(60000)
     }
-    run() // processes seq 1
-    spool(dir, "s1", Seq(rec("shardId-000000000000", 2, "2024-01-01 01:00:00", "k2", "r2")))
+    produce(dir, Seq("r1"), key = Some("k"))
+    run() // processes r1
+    produce(dir, Seq("r2"), key = Some("k"))
     run() // NextShardIterator analog: resumes at the checkpointed offset
-    val out = spark.read.parquet(s"$dir/_out")
-      .select("sequenceNumber").collect().map(_.getLong(0)).sorted
-    assert(out.toSeq == Seq(1L, 2L), "each record delivered exactly once across restarts")
+    assert(messages(spark.read.parquet(s"$dir/_out")) == Seq("r1", "r2"),
+      "each record delivered exactly once across restarts")
   }
 
   test("stream-info table renders the 6-row descriptor (consumer.go:88-114)") {
-    val dir = baseSpool()
-    val r = new StreamReader(StreamReaderConfig(dir, Seq("s1"), StartPosition.TrimHorizon))
-    val info = r.streamInfo(spark, "s1", "Mon, 01 Jan 2024 00:00:00 UTC", "NONE", 24)
-      .collect().map(x => (x.getString(0), x.getString(1))).toMap
+    val dir = tmp()
+    produce(dir, Seq("a1"), key = Some(keyA))
+    produce(dir, Seq("b1"), key = Some(keyB))
+    val closedShard = ShardSpoolSink.shardFor(keyB, Cli.ProduceShards)
+    Files.write(new File(s"$dir/s1/$closedShard/_closed").toPath, Array.emptyByteArray)
+    val rows = ShardSpoolSource.streamInfo(spark, dir, "s1")
+      .collect().map(x => (x.getString(0), x.getString(1))).toSeq
+    assert(rows.map(_._1) == Seq("Stream name:", "Created at:", "Encryption:",
+      "Retention:", "Active:", "Closed:"))
+    val info = rows.toMap
     assert(info("Stream name:") == "s1")
-    assert(info("Active:") == "2 shards")
-    assert(info("Closed:") == "0 shards")
+    assert(info("Created at:").matches("""\w{3}, \d{2} \w{3} \d{4} \d{2}:\d{2}:\d{2} UTC"""),
+      info("Created at:"))
+    assert(info("Encryption:") == "NONE")
     assert(info("Retention:") == "24 hours")
+    assert(info("Active:") == "1 shards")
+    assert(info("Closed:") == "1 shards")
   }
 }
