@@ -207,7 +207,7 @@ object Cli {
     case Right(Help) =>
       println(helpText)
     case Right(Consume(cfg)) =>
-      val spark = session()
+      val spark = Session(cores = 4)
       val frame = consumeFrame(spark, cfg)
       // B6: describe each stream before reading it (consumer.go:88-114)
       if (cfg.verbose) cfg.streams.foreach { stream =>
@@ -219,18 +219,8 @@ object Cli {
         .start()
       q.awaitTermination() // D1: first stream error surfaces here and kills the process
     case Right(Produce(cfg)) =>
-      val spark = session()
+      val spark = Session(cores = 4)
       produce(spark, cfg, scala.io.Source.stdin.getLines().toSeq)
       spark.stop()
-  }
-
-  private def session(): SparkSession = {
-    val b = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    (Tables.sessionConf ++ Tables.staticConf).foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }

@@ -2456,16 +2456,7 @@ object LlmQueries {
         string_agg(CASE WHEN kept = 1 THEN chunk_text END,
                    ' ' ORDER BY chunk_id) AS scrubbed_text
       FROM fl GROUP BY doc_id""")) { (s, dir) =>
-      // SPARK_GRAFT_Q142_DUP_CAP (bench-only knob, round 20, VERDICT r19
-      // ask #4): forces the production Bloom fallback in a measured run
-      // (cap=0 -> every dup-hash count exceeds it) so the scale path has
-      // a benchmarked price, not just its parity spec. Unset everywhere
-      // else — Verify and the oracle always exercise the default path,
-      // and TextPipelineSpec pins the two paths bit-identical.
-      sys.env.get("SPARK_GRAFT_Q142_DUP_CAP").map(_.toLong) match {
-        case Some(cap) => chunkScrub(dupCorpus(s, dir), broadcastDupCap = cap)
-        case None      => chunkScrub(dupCorpus(s, dir))
-      }
+      chunkScrub(dupCorpus(s, dir))
     },
 
     // --------------------------------------------------------------- Q143
@@ -4239,7 +4230,6 @@ object LlmQueries {
     checkpointDir.foreach(session.sparkContext.setCheckpointDir)
     def truncate(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    def ptime[T](name: String)(f: => T): T = { val t0=System.nanoTime; val r=f; if (sys.env.contains("GRAFT_CC_PROFILE")) println(f"CCPROF $name: ${(System.nanoTime-t0)/1e9}%.2f s"); r }
     // Pre-partition the edges on SRC, once. Every round aggregates
     // min-per-src — round 1 directly (groupBy(src) over the cache), later
     // rounds after a broadcast join that PRESERVES the streamed side's
@@ -4293,9 +4283,8 @@ object LlmQueries {
     // not the corpus-sized count the r12 form paid (frontierN from round 1
     // on comes from the observed metrics, and round 1 never reads it)
     var frontierN =
-      ptime("docs nonempty probe")(
-        if (graft.Bounded.nonEmpty(docs, "CC loop-entry probe")) Long.MaxValue
-        else 0L)
+      if (graft.Bounded.nonEmpty(docs, "CC loop-entry probe")) Long.MaxValue
+      else 0L
     var round = 0
     while (frontierN > 0) {
       round += 1
@@ -4364,7 +4353,7 @@ object LlmQueries {
       // write per round — and no observe node at all, so no listener is
       // left registered by an obs.get that never ran.
       if (checkpointDir.isDefined) {
-        val next = ptime(s"round $round truncate")(truncate(chased))
+        val next = truncate(chased)
         val r = graft.Bounded.one(
           next.agg(sum(col("chg").cast("long")), count(lit(1))),
           s"CC round $round frontier/delta sizes")
@@ -4378,7 +4367,7 @@ object LlmQueries {
         val observed = chased.observe(obs,
           sum(col("chg").cast("long")).as("chg_n"),
           count(lit(1)).as("delta_n"))
-        val next = ptime(s"round $round truncate+observe")(truncate(observed))
+        val next = truncate(observed)
         val metrics = obs.get
         frontierN = metrics.get("chg_n") match {
           case Some(l: java.lang.Long) => l.longValue // null sum = empty round
@@ -4410,7 +4399,7 @@ object LlmQueries {
         coalesce(col("d_can"), col("doc_id")).as("canonical"),
         coalesce(col("d_can"), col("doc_id")).equalTo(col("doc_id")).as("kept"))
       .localCheckpoint(true)
-    ptime("final expand")(out.count())
+    out.count()
     edges.unpersist()
     (out, round)
   }
@@ -4935,8 +4924,10 @@ object LlmQueries {
     * kept = 1 — bit-identical output on both paths (TextPipelineSpec
     * pins the forced-Bloom path against the broadcast path).
     *
-    * Measured fallback price (round 20, VERDICT r19 ask #4 — forced via
-    * the bench-only SPARK_GRAFT_Q142_DUP_CAP knob in clean windows,
+    * Measured fallback price (round 20, VERDICT r19 ask #4 — the Bloom
+    * path forced with `broadcastDupCap = 0`, the same lever TextPipelineSpec
+    * "q142 chunk scrub: the forced Bloom scale path is bit-identical…"
+    * pulls, measured in clean windows in the committed
     * `AB_q142bloom_r20_{sf5,sf10}_{bcast,bloom}.json`): broadcast
     * 2.68 / 3.82 s vs forced Bloom 4.29 / 4.44 s at sf5 / sf10 — a
     * 1.16–1.60x premium covering the Bloom build, the split, and the

@@ -770,16 +770,14 @@ object VectorQueries {
     */
   private[graft] def kmeansCentroids(base: DataFrame, k: Int,
       iters: Int): Seq[(Long, Seq[Double])] = {
-    var centroids: Seq[(Long, Seq[Double])] = kmProf(s"seed collect k=$k")(
-      graft.Bounded.collect(base
-        .select(col("vec_id"), col("v"), md5(col("vec_id").cast("string")).as("mk"))
-        .orderBy(col("mk"), col("vec_id")).limit(k),
-        cap = k, what = s"k-means seed rows (k=$k)"))
+    var centroids: Seq[(Long, Seq[Double])] = graft.Bounded.collect(base
+      .select(col("vec_id"), col("v"), md5(col("vec_id").cast("string")).as("mk"))
+      .orderBy(col("mk"), col("vec_id")).limit(k),
+      cap = k, what = s"k-means seed rows (k=$k)")
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
     for (it <- 1 until iters)
-      centroids = kmProf(s"mean collect pass $it")(
-        graft.Bounded.collect(kmMeans(argminAssign(base, centroids)),
-          cap = k * 64, what = s"k-means centroid means (k=$k x 64 dims)"))
+      centroids = graft.Bounded.collect(kmMeans(argminAssign(base, centroids)),
+        cap = k * 64, what = s"k-means centroid means (k=$k x 64 dims)")
         .groupBy(_.getLong(0)).toSeq
         .map { case (cid, rows) =>
           (cid, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
@@ -999,9 +997,8 @@ object VectorQueries {
     // result is materialized (the CC kernel does this anyway for its own
     // lineage hygiene) so both caches release before returning.
     val corpusP = corpus.persist()
-    val kk = k.getOrElse(kmProf("corpus count")(semDedupK(corpusP.count())))
-    val asg = kmProf("kmeansAssign driver loop")(
-      kmeansAssign(corpusP, kk, iters)).persist()
+    val kk = k.getOrElse(semDedupK(corpusP.count()))
+    val asg = kmeansAssign(corpusP, kk, iters).persist()
     // production cell-size posture (round 18, VERDICT r17 ask #3): with
     // maxCell set, over-cap cells re-split before the pair kernel, so the
     // quadratic within-cell term stays <= maxCell² per cell at ANY corpus
@@ -1032,17 +1029,10 @@ object VectorQueries {
       .select(col("cluster_id"), col("km_cluster"),
         (-col("best.nid")).as("keep_id"),
         col("best.quality").as("max_quality"), col("n_members"))
-    val outM = kmProf("final reduce materialize")(out.localCheckpoint(true))
+    val outM = out.localCheckpoint(true)
     asg.unpersist()
     corpusP.unpersist()
     outM
-  }
-
-  private def kmProf[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime; val r = f
-    if (sys.env.contains("GRAFT_KM_PROFILE"))
-      println(f"KMPROF $name: ${(System.nanoTime - t0) / 1e9}%.2f s")
-    r
   }
 
   /** q123's corpus-derived k: max(8, min(512, ceil(sqrt(n / 6)))) —

@@ -610,8 +610,7 @@ final case class BloomProbe(
     copy(child = newChild)
 }
 
-/** Injector: `SparkSession.builder.withExtensions(new GraftExtensions)` at
-  * session build time, or [[GraftExtensions.register]] on a live session.
+/** Injector: `withExtensions(new GraftExtensions)` on a session builder, or [[GraftExtensions.register]] on a live session.
   */
 /** `graft_gram_stats(string) → struct<n2,top2,n5,d5>`: q118's per-doc
   * repetition statistics in one token pass (kernel + split contract in

@@ -610,6 +610,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(!all.exists(_.nodeName.contains("CartesianProduct")))
   }
 
+  /** (file, lines) of every .scala file under `dir`, for the source audits. */
+  private def sourceLines(dir: String): Seq[(java.io.File, Vector[String])] = {
+    def walk(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) walk(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val root = new java.io.File(dir)
+    assert(root.isDirectory, s"expected ${root.getAbsolutePath}")
+    walk(root).map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      f -> (try src.getLines().toVector finally src.close())
+    }
+  }
+
   test("driver-fetch discipline: src/main contains no raw .collect()/.head()/.take() — every Dataset fetch goes through Bounded or a justified allowlist entry") {
     // VERDICT r14 ask #6 made the audit mechanical over operators/*;
     // VERDICT r15 ask #5 + ADVICE r15 make it TOTAL: the scan now covers
@@ -626,7 +640,6 @@ class PlanAuditSpec extends SparkSpec {
     // exempt iff some entry matches both.
     val allow: Seq[(String, String, String)] = Seq(
       ("Bounded.scala", ".take(", "Bounded itself: the cap-enforcing take is the audited primitive"),
-      ("Explain.scala", "df.collect()", "diagnostic main for .explain dumps, never a registered query; collects to finalize AQE"),
       ("Bench.scala", ".take(12)", "Seq[(String,fn)] of query names, not a Dataset"),
       ("Bench.scala", "f.take(8).sum", "Array[Long] of /proc/stat jiffy fields (steal_pct window total)"),
       ("Verify.scala", "args.take(2)", "Array[String] CLI args"),
@@ -639,15 +652,7 @@ class PlanAuditSpec extends SparkSpec {
       ("ShardSpoolSource.scala", ".last", "in-memory shard-offset Vector on the driver (source metadata, not data)"),
       ("ShardSpoolSource.scala", "avail.take(", "in-memory per-shard offset Vector (admission control)"),
       ("TopK.scala", ".sorted(ord).take(k)", "Seq buffer inside the UDAF, bounded by k by construction"))
-    def walk(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f =>
-        if (f.isDirectory) walk(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"expected ${root.getAbsolutePath}")
-    val offenders = walk(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val lines = try src.getLines().toVector finally src.close()
+    val offenders = sourceLines("src/main/scala/graft").flatMap { case (f, lines) =>
       lines.zipWithIndex.collect {
         case (l, i) if fetch.findFirstIn(l).isDefined &&
           !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
@@ -665,6 +670,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "raw driver fetches in src/main (use graft.Bounded or justify an allowlist entry):\n" +
         offenders.mkString("\n"))
+  }
+
+  test("session discipline: src/main builds a SparkSession only in graft.Session, and no operator reads the environment") {
+    // one builder means one core default and one conf set for every entry
+    // point; an env read inside a kernel is a plan or output switch that
+    // no spec, oracle run or benchmark ever sets
+    def hits(dir: String, pattern: String): Seq[String] =
+      sourceLines(dir).flatMap { case (f, lines) =>
+        lines.zipWithIndex.collect {
+          case (l, i) if l.contains(pattern) => s"${f.getName}:${i + 1}: ${l.trim}"
+        }
+      }
+    val builders = hits("src/main/scala", "SparkSession.builder")
+    assert(builders.size == 1 && builders.head.startsWith("Session.scala:"),
+      "SparkSession.builder must appear once, in graft/Session.scala:\n" +
+        builders.mkString("\n"))
+    val envReads = hits("src/main/scala/graft/operators", "sys.env")
+    assert(envReads.isEmpty,
+      "environment reads in graft/operators:\n" + envReads.mkString("\n"))
   }
 
   test("q140 JL audit is map-only: literal matrix folds, no join, one group exchange") {

@@ -10,6 +10,8 @@
 # bench_details_<round>_*.json at the repo root. Run
 # tools/gen_bench_table.py <round> afterwards to regenerate the
 # BASELINE.md gate table, and tools/check_artifacts.py before committing.
+# Cores come from graft.Session: SPARK_GRAFT_CPUS when exported, else
+# the machine's.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -30,7 +32,7 @@ run_scale() { # <tag> <sfdir>
   # the generated table (ADVICE r16)
   log="$(mktemp /tmp/bench_${ROUND}_${tag}.XXXX.log)"
   rc=0
-  SPARK_GRAFT_SF_DIR="$dir" SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR="$dir" \
   SPARK_GRAFT_PREV_DETAILS="$prev" \
   SPARK_GRAFT_BENCH_DETAILS="bench_details_${ROUND}_${tag}.json" \
   SPARK_GRAFT_BENCH_SUMMARY="BENCH_${ROUND}_${tag}.json" \
